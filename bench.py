@@ -257,11 +257,12 @@ def main() -> None:
             if name in errors:
                 continue
             try:
-                cache_present[name].append(_cache_nonempty())
+                cached = _cache_nonempty()
                 t0 = time.time()
                 n = qs[name](spark, sf_dir).count()
                 dt = time.time() - t0
                 samples[name].append(dt)
+                cache_present[name].append(cached)
                 print(
                     f"# session {pass_no + 1}/{PASSES} {name}: {n} rows in {dt:.3f}s",
                     file=sys.stderr,

@@ -511,6 +511,9 @@ def connected_components(
     labels = (
         edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
     ).localCheckpoint()
+    # the eager checkpoint above filled the `edges` cache; the probe
+    # persist has no reader left
+    e_p.unpersist()
     for _ in range(max_iterations):
         nbr = (
             edges.join(
@@ -536,6 +539,7 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    edges.unpersist()
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

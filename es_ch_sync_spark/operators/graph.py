@@ -215,12 +215,15 @@ def pagerank_fixed(
     # rationale and same integer arithmetic as hits_fixed below (each
     # round above pays join + agg + eager checkpoint in blocking jobs;
     # Python ints replicate the BIGINT div chain exactly).  r17 (VERDICT
-    # what's-wrong #2): the probed frame is persist()-ed FIRST, so the
-    # partitions the executeTake ramp computes are cached — on the
-    # over-cap branch the distributed path reads the cache instead of
-    # re-executing the upstream mining (the r16 shape paid one extra
-    # full map-side pass there); on the small path the probe is still
-    # ONE bounded job and the (≤cap-row) cache is dropped on return.
+    # what's-wrong #2): the probed frame is persist()-ed FIRST.  The
+    # executeTake ramp scans only its first partitions, and the block
+    # manager stores each of those whole before the limit reads from it
+    # (a 1001-row probe over 8 × 250k-row partitions caches 1 of 8), so
+    # the over-cap distributed path reads those from the cache and
+    # computes the rest once, on first use, instead of re-executing the
+    # upstream mining (the r16 shape paid one extra full map-side pass
+    # there); on the small path the probe is still ONE bounded job and
+    # the cache is dropped on return.
     e_p = e.persist()
     probe = e_p.limit(small_graph_edges + 1).collect()
     if len(probe) <= small_graph_edges:
@@ -300,6 +303,7 @@ def pagerank_fixed(
             )
             .localCheckpoint(eager=True)
         )
+    e_p.unpersist()
     return ranks
 
 
@@ -474,6 +478,7 @@ def hits_fixed(
             .agg(F.sum("a").cast("long").alias("h"))
         )
         hubs = _norm(h_raw, "h")
+    e_p.unpersist()
     return (
         nodes.join(auths, "id", "left")
         .join(hubs.withColumnRenamed("h", "_h"), "id", "left")

@@ -1,5 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched Pandas UDFs.
+with typed metadata, processed executor-side through one mapInArrow
+row-map (``_map_blobs``).
 
 Decode support is two-tier, honestly split by what pure numpy can do:
 
@@ -33,8 +34,9 @@ Decode support is two-tier, honestly split by what pure numpy can do:
   never silently fake pixels.
 
 Everything Spark-side is real and tested either way: the schema contract,
-the `mapInPandas` batch shape, partition sizing, and the metadata
-projection.
+the single Python boundary (``_map_blobs``: Arrow record batches in and
+out, one plain per-row kernel, per-row error isolation), partition
+sizing, and the metadata projection.
 
 Scale posture for binary columns:
 - keep blobs in their own column so Parquet column pruning skips them for
@@ -48,10 +50,6 @@ Scale posture for binary columns:
 from __future__ import annotations
 
 import struct as _struct
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,6 +65,51 @@ from pyspark.sql import types as T
 _ROW_DECODE_ERRORS = (
     NotImplementedError, ValueError, IndexError, KeyError, _struct.error,
 )
+
+
+def _map_blobs(
+    df: DataFrame, cols: list[str], schema: T.StructType, row_fn
+) -> DataFrame:
+    """The module's one Python boundary: ``mapInArrow`` over ``cols``.
+
+    ``row_fn(*values)`` is a generator called once per input row with
+    that row's ``cols`` values (blobs arrive as ``bytes``, nulls as
+    None).  Each tuple it yields becomes one output row, prefixed with
+    the row's first value (the id).  Output batches are built against
+    ``schema``'s Arrow form.
+
+    When ``schema`` ends in an ``error`` field the helper owns row
+    isolation: yielded rows get a null ``error``, and a
+    ``_ROW_DECODE_ERRORS`` exception keeps the rows yielded before it,
+    then emits one ``(id, nulls…, message)`` row — a bad blob never fails
+    the job.  Without an ``error`` field, exceptions propagate."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    isolate = schema.fieldNames()[-1] == "error"
+    catch = _ROW_DECODE_ERRORS if isolate else ()
+    tail = (None,) if isolate else ()
+    nulls = (None,) * (len(schema.fields) - 2)
+
+    def batches(it):
+        import pyarrow as pa
+
+        for rb in it:
+            rows = []
+            for values in zip(*(c.to_pylist() for c in rb.columns)):
+                try:
+                    for r in row_fn(*values):
+                        rows.append((values[0], *r, *tail))
+                except catch as exc:
+                    rows.append((values[0], *nulls, str(exc)[:200]))
+            columns = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.select(*cols).mapInArrow(batches, schema)
+
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -2099,7 +2142,7 @@ def decode_image_stub(blob: bytes) -> dict:
     """Deterministic fake decode: derives pseudo-pixel stats from the bytes.
 
     Replace body with PIL/libvips decode in a container that has them; the
-    mapInPandas plumbing, schema, and batch shape do not change."""
+    row-map boundary and schema do not change."""
     if blob is None:
         return {"n_bytes": None, "content_md5": None, "feature": None}
     import hashlib
@@ -2255,24 +2298,18 @@ def sample_video_frames(blob: bytes, every_ms: int) -> list[bytes]:
     return out
 
 
-def extract_features(media: DataFrame, batch_rows: int = 256) -> DataFrame:
-    """Blob → (n_bytes, md5, feature[8]) via mapInPandas (Arrow batches).
+def extract_features(media: DataFrame) -> DataFrame:
+    """Blob → (n_bytes, md5, feature[8]) via the mapInArrow row-map.
 
-    The UDF sees pandas DataFrames, never Python-per-row; output rows are
-    tiny so every downstream op (dedup by content_md5, ANN over feature)
-    shuffles features, not blobs."""
+    The kernel sees one blob at a time inside Arrow batches; output rows
+    are tiny so every downstream op (dedup by content_md5, ANN over
+    feature) shuffles features, not blobs."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                d = decode_image_stub(bytes(blob) if blob is not None else None)
-                out.append(
-                    (mid, d["n_bytes"], d["content_md5"], d["feature"])
-                )
-            yield pd.DataFrame(out, columns=["media_id", "n_bytes", "content_md5", "feature"])
+    def features(_, blob):
+        d = decode_image_stub(blob)
+        yield d["n_bytes"], d["content_md5"], d["feature"]
 
-    return media.select("media_id", "content").mapInPandas(batches, FEATURE_SCHEMA)
+    return _map_blobs(media, ["media_id", "content"], FEATURE_SCHEMA, features)
 
 
 PIXEL_STATS_SCHEMA = T.StructType(
@@ -2288,75 +2325,25 @@ PIXEL_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_pixel_features(
-    media: DataFrame, batch_rows: int = 256, use_arrow: bool = False
-) -> DataFrame:
-    """REAL decode → per-channel pixel means via mapInPandas.
+def extract_pixel_features(media: DataFrame) -> DataFrame:
+    """REAL decode → per-channel pixel means via the mapInArrow row-map.
 
     Uncompressed blobs (BMP/PPM) decode in pure numpy; codec blobs land in
     the per-row ``error`` column with null stats — row-level isolation,
     same contract as the quarantine operators (a bad blob never fails the
     job).  Output rows are tiny (7 scalars), so downstream shuffles move
-    stats, not pixels.  ``use_arrow`` (r17 pilot, guide §4): mapInArrow
-    variant that skips the Arrow→pandas conversion on both sides."""
+    stats, not pixels."""
 
-    def _decode_rows(ids, blobs):
-        out = []
-        for mid, blob in zip(ids, blobs):
-            try:
-                px = decode_image(bytes(blob))
-                m = px.reshape(-1, 3).mean(axis=0)
-                out.append(
-                    (int(mid), px.shape[1], px.shape[0],
-                     round(float(m[0]), 4), round(float(m[1]), 4),
-                     round(float(m[2]), 4), None)
-                )
-            except _ROW_DECODE_ERRORS as exc:
-                out.append((int(mid), None, None, None, None, None, str(exc)[:200]))
-        return out
+    def pixel_means(_, blob):
+        px = decode_image(blob)
+        m = px.reshape(-1, 3).mean(axis=0)
+        yield (px.shape[1], px.shape[0],
+               round(float(m[0]), 4), round(float(m[1]), 4),
+               round(float(m[2]), 4))
 
-    if use_arrow:
-        def batches_arrow(it):
-            import pyarrow as pa
-
-            cols = ["media_id", "width", "height", "mean_r", "mean_g",
-                    "mean_b", "error"]
-            types = [pa.int64(), pa.int32(), pa.int32(), pa.float64(),
-                     pa.float64(), pa.float64(), pa.string()]
-            for rb in it:
-                rows = _decode_rows(
-                    rb.column(0).to_pylist(), rb.column(1).to_pylist()
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([r[i] for r in rows], types[i])
-                     for i in range(7)],
-                    names=cols,
-                )
-
-        return media.select("media_id", "content").mapInArrow(
-            batches_arrow, PIXEL_STATS_SCHEMA
-        )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    px = decode_image(bytes(blob))
-                    m = px.reshape(-1, 3).mean(axis=0)
-                    out.append(
-                        (mid, px.shape[1], px.shape[0],
-                         round(float(m[0]), 4), round(float(m[1]), 4),
-                         round(float(m[2]), 4), None)
-                    )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "mean_r", "mean_g", "mean_b", "error"],
-            )
-
-    return media.select("media_id", "content").mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    return _map_blobs(
+        media, ["media_id", "content"], PIXEL_STATS_SCHEMA, pixel_means
+    )
 
 
 AUDIO_STATS_SCHEMA = T.StructType(
@@ -2372,45 +2359,29 @@ AUDIO_STATS_SCHEMA = T.StructType(
 
 
 def extract_audio_stats(media: DataFrame) -> DataFrame:
-    """REAL audio decode → whole-clip stats via mapInPandas, dispatched
-    on magic (RIFF/WAVE PCM16 or FLAC — r16 directive #8).  Bad blobs
-    land in the per-row ``error`` column; output rows are 5 scalars, so
-    downstream shuffles move stats, not samples."""
+    """REAL audio decode → whole-clip stats via the mapInArrow row-map,
+    dispatched on magic (RIFF/WAVE PCM16 or FLAC — r16 directive #8).
+    Bad blobs land in the per-row ``error`` column; output rows are 5
+    scalars, so downstream shuffles move stats, not samples."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def clip_stats(_, raw):
         import numpy as np
 
         from es_ch_sync_spark.operators.flac import decode_flac
 
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    raw = bytes(blob)
-                    if raw[:4] == b"fLaC":
-                        s, rate = decode_flac(raw)
-                    elif raw[:4] == b"RIFF":
-                        s, rate = decode_wav_pcm16(raw)
-                    else:
-                        raise ValueError("unrecognized audio format")
-                    f = np.asarray(s, np.float64).reshape(len(s), -1)
-                    out.append(
-                        (mid, len(f), int(rate),
-                         round(float(f.mean()), 4),
-                         round(float(np.sqrt((f * f).mean())), 4), None)
-                    )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_samples", "sample_rate",
-                    "mean_amp", "rms", "error",
-                ],
-            )
+        if raw[:4] == b"fLaC":
+            s, rate = decode_flac(raw)
+        elif raw[:4] == b"RIFF":
+            s, rate = decode_wav_pcm16(raw)
+        else:
+            raise ValueError("unrecognized audio format")
+        f = np.asarray(s, np.float64).reshape(len(s), -1)
+        yield (len(f), int(rate),
+               round(float(f.mean()), 4),
+               round(float(np.sqrt((f * f).mean())), 4))
 
-    return media.select("media_id", "content").mapInPandas(
-        batches, AUDIO_STATS_SCHEMA
+    return _map_blobs(
+        media, ["media_id", "content"], AUDIO_STATS_SCHEMA, clip_stats
     )
 
 
@@ -2430,20 +2401,10 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
     row inside Arrow batches; codec formats go to ``error``.  Blobs stay on
     executors end to end."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    out.append((mid, resize_image(bytes(blob), width, height),
-                                width, height, None))
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=["media_id", "content", "width", "height", "error"]
-            )
+    def resized(_, blob):
+        yield resize_image(blob, width, height), width, height
 
-    return media.select("media_id", "content").mapInPandas(batches, RESIZE_SCHEMA)
+    return _map_blobs(media, ["media_id", "content"], RESIZE_SCHEMA, resized)
 
 
 WAV_CHUNK_SCHEMA = T.StructType(
@@ -2467,37 +2428,31 @@ def chunk_wav(media: DataFrame, chunk_ms: int = 100) -> DataFrame:
     rounded 4dp for cross-engine hashing.  Non-WAV/codec blobs produce one
     ``error`` row each."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def chunks(_, blob):
         import numpy as np
 
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    samples, rate = decode_wav_pcm16(bytes(blob))
-                    per = max(1, (rate * chunk_ms) // 1000)
-                    n = len(samples)
-                    for ci in range(0, max((n + per - 1) // per, 1)):
-                        seg = samples[ci * per : (ci + 1) * per].astype(np.float64)
-                        rms = float(np.sqrt(np.mean(seg * seg))) if len(seg) else 0.0
-                        out.append(
-                            (mid, ci, ci * per * 1000 // rate,
-                             min((ci + 1) * per, n) * 1000 // rate,
-                             len(seg), round(rms, 4), None)
-                        )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "chunk_idx", "start_ms", "end_ms", "n_samples", "rms", "error"],
-            )
+        samples, rate = decode_wav_pcm16(blob)
+        per = max(1, (rate * chunk_ms) // 1000)
+        n = len(samples)
+        for ci in range(0, max((n + per - 1) // per, 1)):
+            seg = samples[ci * per : (ci + 1) * per].astype(np.float64)
+            rms = float(np.sqrt(np.mean(seg * seg))) if len(seg) else 0.0
+            yield (ci, ci * per * 1000 // rate,
+                   min((ci + 1) * per, n) * 1000 // rate,
+                   len(seg), round(rms, 4))
 
-    return media.select("media_id", "content").mapInPandas(batches, WAV_CHUNK_SCHEMA)
+    return _map_blobs(media, ["media_id", "content"], WAV_CHUNK_SCHEMA, chunks)
 
 
-WAV_FEATURE_SCHEMA = (
-    "media_id long, chunk_idx int, n_samples int, zcr int, peak int, "
-    "error string"
+WAV_FEATURE_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), True),
+        T.StructField("chunk_idx", T.IntegerType(), True),
+        T.StructField("n_samples", T.IntegerType(), True),
+        T.StructField("zcr", T.IntegerType(), True),
+        T.StructField("peak", T.IntegerType(), True),
+        T.StructField("error", T.StringType(), True),
+    ]
 )
 
 
@@ -2509,43 +2464,24 @@ def chunk_wav_features(media: DataFrame, chunk_ms: int = 100) -> DataFrame:
     so the cross-engine check is hash-exact with no float rounding at
     all (RMS needed 4dp rounding; these don't).
 
-    Same Arrow mapInPandas shape as chunk_wav: the blob never leaves the
-    executor, one output row per 100 ms chunk, decode errors become one
-    ``error`` row."""
+    Same row-map shape as chunk_wav: the blob never leaves the executor,
+    one output row per 100 ms chunk, decode errors become one ``error``
+    row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def chunk_features(_, blob):
         import numpy as np
 
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    samples, rate = decode_wav_pcm16(bytes(blob))
-                    per = max(1, (rate * chunk_ms) // 1000)
-                    n = len(samples)
-                    for ci in range(0, max((n + per - 1) // per, 1)):
-                        seg = samples[ci * per : (ci + 1) * per].astype(
-                            np.int64
-                        )
-                        zcr = (
-                            int(np.sum(seg[:-1] * seg[1:] < 0))
-                            if len(seg) > 1
-                            else 0
-                        )
-                        peak = int(np.max(np.abs(seg))) if len(seg) else 0
-                        out.append((mid, ci, len(seg), zcr, peak, None))
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "chunk_idx", "n_samples", "zcr", "peak",
-                    "error",
-                ],
-            )
+        samples, rate = decode_wav_pcm16(blob)
+        per = max(1, (rate * chunk_ms) // 1000)
+        n = len(samples)
+        for ci in range(0, max((n + per - 1) // per, 1)):
+            seg = samples[ci * per : (ci + 1) * per].astype(np.int64)
+            zcr = int(np.sum(seg[:-1] * seg[1:] < 0)) if len(seg) > 1 else 0
+            peak = int(np.max(np.abs(seg))) if len(seg) else 0
+            yield ci, len(seg), zcr, peak
 
-    return media.select("media_id", "content").mapInPandas(
-        batches, WAV_FEATURE_SCHEMA
+    return _map_blobs(
+        media, ["media_id", "content"], WAV_FEATURE_SCHEMA, chunk_features
     )
 
 
@@ -2819,7 +2755,7 @@ def synth_mjpeg_blob(media_id: int) -> bytes:
     return encode_mjpeg_avi(frames, 16, 8, fps=10)
 
 
-def synth_media(docs: DataFrame, kind: str, use_arrow: bool = False) -> DataFrame:
+def synth_media(docs: DataFrame, kind: str) -> DataFrame:
     """(media_id, kind, content) with real encoded BMP/WAV blobs derived
     from doc_id — generated executor-side in Arrow batches (the driver
     never holds a blob).
@@ -2859,37 +2795,10 @@ def synth_media(docs: DataFrame, kind: str, use_arrow: bool = False) -> DataFram
         ]
     )
 
-    if use_arrow:
-        # r17 pilot (guide §4, VERDICT next-round #5): mapInArrow skips the
-        # Arrow→pandas materialization of the id/blob columns on both sides
-        # of the boundary; the per-row codec loop is unchanged.
-        def batches_arrow(it):
-            import pyarrow as pa
+    def synth(doc_id):
+        yield kind, maker(int(doc_id))
 
-            for rb in it:
-                ids = rb.column(0).to_pylist()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ids, pa.int64()),
-                        pa.array([kind] * len(ids), pa.string()),
-                        pa.array([maker(int(m)) for m in ids], pa.binary()),
-                    ],
-                    names=["media_id", "kind", "content"],
-                )
-
-        return docs.select("doc_id").mapInArrow(batches_arrow, schema)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": kind,
-                    "content": [maker(int(m)) for m in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, schema)
+    return _map_blobs(docs, ["doc_id"], schema, synth)
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
@@ -2942,7 +2851,7 @@ def plan_audio_chunks(
 ) -> DataFrame:
     """Audio chunking PLAN: overlapping ``chunk_ms`` windows every
     ``hop_ms`` across each clip — the work list an ASR/feature kernel
-    would consume via mapInPandas (decode stays stubbed; the plan is real
+    would consume via the row-map (decode stays stubbed; the plan is real
     and oracle-checked).
 
     Like plan_frame_samples, this is metadata-only: the blob column is
@@ -2974,7 +2883,7 @@ def plan_frame_samples(media: DataFrame, every_ms: int = 500) -> DataFrame:
 
     This is the Spark-side half of frame sampling — the work list the
     decode kernel (``sample_video_frames``, stubbed here) would consume via
-    mapInPandas exactly like ``extract_features``.  Planning from metadata
+    the row-map exactly like ``extract_features``.  Planning from metadata
     keeps the explode blob-free: Parquet column pruning drops ``content``
     entirely, so a 100 TB video table plans its sampling schedule reading
     only (media_id, duration_ms).  Frame indices are pure column arithmetic
@@ -3009,52 +2918,34 @@ def video_frame_stats(media: DataFrame, every_ms: int = 200) -> DataFrame:
     it with the baseline-JPEG decoder, and emit per-sampled-frame stats —
     (media_id, frame_idx, t_ms, width, height, mean_luma).
 
-    Same contract as extract_pixel_features: Arrow-batched mapInPandas,
+    Same contract as extract_pixel_features: the mapInArrow row-map,
     per-row error isolation (a bad container/frame yields one error row,
     never a failed job), and tiny output rows so shuffles move stats,
     not pixels.  At 100 TB the blob column never leaves the executor and
     the decode parallelism is the scan's partitioning."""
     every_ms = int(every_ms)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    v = parse_mjpeg_avi(bytes(blob))
-                    n = len(v["frames"])
-                    t = 0
-                    while True:
-                        idx = (t * v["rate"]) // (1000 * v["scale"])
-                        if idx >= n:
-                            break
-                        px = decode_jpeg(v["frames"][idx]).astype("float64")
-                        # BT.601 luma (ADVICE r14: mean of the R channel is
-                        # only luma for grayscale frames; color MJPEG needs
-                        # the real weighting).  On gray fixtures the 1-ulp
-                        # float noise vs the plain channel mean is absorbed
-                        # by the round-to-4-decimals below.
-                        luma = (
-                            0.299 * px[..., 0] + 0.587 * px[..., 1]
-                            + 0.114 * px[..., 2]
-                        ).mean()
-                        out.append(
-                            (mid, idx, t, px.shape[1], px.shape[0],
-                             round(float(luma), 4), None)
-                        )
-                        t += every_ms
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_idx", "t_ms", "width", "height",
-                    "mean_luma", "error",
-                ],
-            )
+    def frame_stats(_, blob):
+        v = parse_mjpeg_avi(blob)
+        n = len(v["frames"])
+        t = 0
+        while True:
+            idx = (t * v["rate"]) // (1000 * v["scale"])
+            if idx >= n:
+                break
+            px = decode_jpeg(v["frames"][idx]).astype("float64")
+            # BT.601 luma (ADVICE r14: mean of the R channel is only luma
+            # for grayscale frames; color MJPEG needs the real weighting).
+            # On gray fixtures the 1-ulp float noise vs the plain channel
+            # mean is absorbed by the round-to-4-decimals below.
+            luma = (
+                0.299 * px[..., 0] + 0.587 * px[..., 1] + 0.114 * px[..., 2]
+            ).mean()
+            yield idx, t, px.shape[1], px.shape[0], round(float(luma), 4)
+            t += every_ms
 
-    return media.select("media_id", "content").mapInPandas(
-        batches, VIDEO_FRAME_SCHEMA
+    return _map_blobs(
+        media, ["media_id", "content"], VIDEO_FRAME_SCHEMA, frame_stats
     )
 
 
@@ -3073,37 +2964,26 @@ def video_frame_fingerprints(media: DataFrame, every_ms: int = 200) -> DataFrame
     container, decode the frame under each ``every_ms`` tick, md5 the
     decoded RGB pixel buffer — byte-level container/encoder differences
     (chunk padding, Huffman table choice, restart intervals) vanish, so
-    equal fingerprints mean equal decoded CONTENT.  Same Arrow
-    mapInPandas + per-row error isolation as video_frame_stats."""
+    equal fingerprints mean equal decoded CONTENT.  Same row-map +
+    per-row error isolation as video_frame_stats."""
     import hashlib
 
     every_ms = int(every_ms)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    v = parse_mjpeg_avi(bytes(blob))
-                    n = len(v["frames"])
-                    t = 0
-                    while True:
-                        idx = (t * v["rate"]) // (1000 * v["scale"])
-                        if idx >= n:
-                            break
-                        px = decode_jpeg(v["frames"][idx])
-                        out.append(
-                            (mid, idx, hashlib.md5(px.tobytes()).hexdigest(), None)
-                        )
-                        t += every_ms
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "frame_md5", "error"]
-            )
+    def frame_md5s(_, blob):
+        v = parse_mjpeg_avi(blob)
+        n = len(v["frames"])
+        t = 0
+        while True:
+            idx = (t * v["rate"]) // (1000 * v["scale"])
+            if idx >= n:
+                break
+            px = decode_jpeg(v["frames"][idx])
+            yield idx, hashlib.md5(px.tobytes()).hexdigest()
+            t += every_ms
 
-    return media.select("media_id", "content").mapInPandas(
-        batches, FRAME_FP_SCHEMA
+    return _map_blobs(
+        media, ["media_id", "content"], FRAME_FP_SCHEMA, frame_md5s
     )
 
 
@@ -3139,27 +3019,16 @@ def gif_frame_fingerprints(media: DataFrame) -> DataFrame:
     layout, LZW coding and sub-block packing vanish, so equal
     fingerprints mean equal decoded CONTENT (the video_frame_fingerprints
     contract on the second real container, r14 VERDICT directive #2).
-    Arrow mapInPandas + per-row error isolation."""
+    Same row-map + per-row error isolation."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    v = parse_gif_frames(bytes(blob))
-                    for idx, px in enumerate(v["frames"]):
-                        out.append(
-                            (mid, idx, hashlib.md5(px.tobytes()).hexdigest(), None)
-                        )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "frame_md5", "error"]
-            )
+    def frame_md5s(_, blob):
+        v = parse_gif_frames(blob)
+        for idx, px in enumerate(v["frames"]):
+            yield idx, hashlib.md5(px.tobytes()).hexdigest()
 
-    return media.select("media_id", "content").mapInPandas(
-        batches, FRAME_FP_SCHEMA
+    return _map_blobs(
+        media, ["media_id", "content"], FRAME_FP_SCHEMA, frame_md5s
     )
 
 
@@ -3192,7 +3061,7 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def dhash_features(media: DataFrame, batch_rows: int = 256) -> DataFrame:
+def dhash_features(media: DataFrame) -> DataFrame:
     """Perceptual difference-hash (dHash) per image through REAL decode.
 
     Classic dHash [see e.g. the widely-described "difference hash" of
@@ -3208,28 +3077,14 @@ def dhash_features(media: DataFrame, batch_rows: int = 256) -> DataFrame:
     extends it to near-duplicates.  Output rows are (id, 64-bit scalar) —
     the blobs never shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def dhash(_, blob):
         import numpy as np
 
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    px = decode_image(bytes(blob))
-                    gs = px.astype(np.int64).sum(axis=2)  # (H, W) channel sum
-                    bits = gs[:, :-1] > gs[:, 1:]
-                    h, w = bits.shape
-                    weights = (
-                        np.int64(1) << (np.arange(h)[:, None] * w + np.arange(w))
-                    )
-                    out.append(
-                        (mid, px.shape[1], px.shape[0],
-                         int((bits * weights).sum()), None)
-                    )
-                except _ROW_DECODE_ERRORS as exc:
-                    out.append((mid, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "dhash", "error"]
-            )
+        px = decode_image(blob)
+        gs = px.astype(np.int64).sum(axis=2)  # (H, W) channel sum
+        bits = gs[:, :-1] > gs[:, 1:]
+        h, w = bits.shape
+        weights = np.int64(1) << (np.arange(h)[:, None] * w + np.arange(w))
+        yield px.shape[1], px.shape[0], int((bits * weights).sum())
 
-    return media.select("media_id", "content").mapInPandas(batches, DHASH_SCHEMA)
+    return _map_blobs(media, ["media_id", "content"], DHASH_SCHEMA, dhash)

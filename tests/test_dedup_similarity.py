@@ -15,12 +15,16 @@ from es_ch_sync_spark.operators.text import analyze_documents
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return read_parquet_table(spark, sf_dir, "documents").cache()
+    df = read_parquet_table(spark, sf_dir, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
-    return read_parquet_table(spark, sf_dir, "embeddings").cache()
+    df = read_parquet_table(spark, sf_dir, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 def test_exact_dedup_removes_planted_copies(spark, docs):
@@ -273,18 +277,61 @@ def test_multimodal_numpy_codecs_roundtrip():
     assert rate == 16000 and (d == s).all()
 
 
-def test_pixel_features_isolate_bad_blobs(spark):
-    """A codec blob yields an error row (nulls + message), never a job
-    failure — per-row isolation, same T3 contract as the quarantines."""
-    rows = [
-        (1, "image", bytearray(mm.synth_bmp_blob(1))),
-        (2, "image", bytearray(b"\xff\xd8\xff\xe0 jpeg")),
+_BAD_JPEG = b"\xff\xd8\xff\xe0 jpeg"  # truncated JPEG segment
+_BAD_WAV = b"RIFF\x00\x00"  # not a RIFF/WAVE file
+_BMP, _WAV = mm.synth_bmp_blob(1), mm.synth_wav_blob(1)
+_FLAC, _AVI = mm.synth_flac_blob(1), mm.synth_mjpeg_blob(1)
+
+# every row kernel with an ``error`` column:
+# (kernel, good blob, bad blob, fragment of the bad blob's message)
+_ERROR_KERNELS = {
+    "pixel": (mm.extract_pixel_features, _BMP, _BAD_JPEG, "JPEG"),
+    "audio": (mm.extract_audio_stats, _FLAC, _FLAC[:30], "FLAC"),
+    "resize": (lambda m: mm.resize_media(m, 4, 3), _BMP, _BAD_JPEG, "JPEG"),
+    "chunk_wav": (mm.chunk_wav, _WAV, _BAD_WAV, "RIFF"),
+    "chunk_wav_features": (mm.chunk_wav_features, _WAV, _BAD_WAV, "RIFF"),
+    "video_stats": (mm.video_frame_stats, _AVI, _AVI[:30], "AVI"),
+    "video_fingerprints": (mm.video_frame_fingerprints, _AVI, _AVI[:30], "AVI"),
+    "gif_fingerprints": (
+        mm.gif_frame_fingerprints, mm.synth_agif_blob(1),
+        mm.synth_agif_blob(2)[:40], "GIF",
+    ),
+    "dhash": (mm.dhash_features, _BMP, _BAD_JPEG, "JPEG"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ERROR_KERNELS))
+def test_row_kernels_isolate_bad_blobs(spark, name):
+    """A malformed blob yields exactly one error row (nulls + message),
+    never a job failure, and the good blob's rows carry a null error —
+    per-row isolation, same T3 contract as the quarantines."""
+    kernel, good, bad, message = _ERROR_KERNELS[name]
+    media = spark.createDataFrame(
+        [(1, "x", bytearray(good)), (2, "x", bytearray(bad))],
+        "media_id long, kind string, content binary",
+    )
+    out = kernel(media)
+    values = [c for c in out.columns if c not in ("media_id", "error")]
+    rows = out.collect()
+    ok = [r for r in rows if r["media_id"] == 1]
+    assert ok and all(r["error"] is None for r in ok)
+    assert all(r[c] is not None for r in ok for c in values)
+    (err,) = [r for r in rows if r["media_id"] == 2]
+    assert message in err["error"] and all(err[c] is None for c in values)
+
+
+def test_row_kernel_keeps_rows_before_error(spark):
+    """A clip whose second frame is truncated keeps frame 0's row, then
+    ends in one error row."""
+    good = mm.synth_jpeg_blob(3)
+    clip = mm.encode_mjpeg_avi([good, good[:40]], 16, 16)
+    media = spark.createDataFrame(
+        [(7, "video", bytearray(clip))], "media_id long, kind string, content binary"
+    )
+    rows = mm.video_frame_stats(media, every_ms=100).collect()
+    assert [(r["frame_idx"], r["error"]) for r in rows] == [
+        (0, None), (None, "truncated JPEG segment"),
     ]
-    media = spark.createDataFrame(rows, "media_id long, kind string, content binary")
-    got = {r["media_id"]: r for r in mm.extract_pixel_features(media).collect()}
-    assert got[1]["error"] is None and got[1]["width"] == 8 and got[1]["height"] == 6
-    assert got[2]["error"] is not None and "JPEG" in got[2]["error"]
-    assert got[2]["mean_r"] is None
 
 
 def test_connected_components_chain_and_triangle(spark):

@@ -2334,19 +2334,3 @@ def test_gif_frame_dedup_hand_computed(spark):
     }
     # content 7: 3 + 1 = 4 frames across 2 clips; content 9: 1 frame, 1 clip
     assert rows == {(4, 2): 1, (1, 1): 1}
-
-
-def test_multimodal_arrow_boundary_matches_pandas(spark, sf_dir):
-    """r17 mapInArrow pilot: the Arrow-boundary variants of synth_media +
-    extract_pixel_features must produce exactly the pandas variants' rows
-    (same codec loops, only the batch transport differs)."""
-    from es_ch_sync_spark.operators import multimodal as mm
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(64)
-
-    def rows(use_arrow):
-        media = mm.synth_media(docs, "gif", use_arrow=use_arrow)
-        out = mm.extract_pixel_features(media, use_arrow=use_arrow)
-        return sorted(tuple(r) for r in out.collect())
-
-    assert rows(True) == rows(False)

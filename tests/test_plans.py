@@ -12,6 +12,9 @@ from es_ch_sync_spark.queries import spark_queries
 
 @pytest.fixture(scope="module")
 def plans(spark, sf_dir):
+    # plan shapes are pinned on an empty cache: a frame another module
+    # left cached would swap its scan for an InMemoryRelation
+    spark.catalog.clearCache()
     qs = spark_queries()
 
     def plan_of(name: str) -> str:

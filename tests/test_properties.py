@@ -9,9 +9,10 @@ row-count law, and dedup idempotency.
 from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -798,6 +799,7 @@ def test_gif_roundtrip_random_images(seed):
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.integers(min_value=0, max_value=2**32 - 1))
+@example(114)  # AUC 0.6328125: an exact half at the 6th decimal
 def test_delong_auc_matches_bruteforce(spark, seed):
     """delong_auc_compare's AUCs equal the brute-force tie-averaged
     pair statistic, and its z matches a direct numpy DeLong on the
@@ -826,8 +828,15 @@ def test_delong_auc_matches_bruteforce(spark, seed):
         ties = (pos[:, None] == neg[None, :]).sum()
         return (wins + 0.5 * ties) / (len(pos) * len(neg))
 
-    assert got["auc_a"] == round(float(brute_auc(a)), 6)
-    assert got["auc_b"] == round(float(brute_auc(b)), 6)
+    def round6(x):
+        # F.round rounds the double's decimal string half-up; Python's
+        # round() would take an exact half to even (0.6328125 -> 0.632812)
+        return float(
+            Decimal(str(float(x))).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+        )
+
+    assert got["auc_a"] == round6(brute_auc(a))
+    assert got["auc_b"] == round6(brute_auc(b))
 
     def structural(x):
         pos, neg = x[y], x[~y]

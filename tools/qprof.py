@@ -1,6 +1,8 @@
 """Per-query optimization harness (r16): time individual queries with
 warmup + N repeats on the bench's exact session/config, and dump their
-``explain('formatted')`` to plans/r16/<name>_<tag>.txt.
+``explain('formatted')`` to plans/$QPROF_PLANS_DIR/<name>_<tag>.txt
+(``plans/`` itself when the variable is unset; ``--reps 0`` dumps plans
+without running anything).
 
 Usage:
     python tools/qprof.py [--plans TAG] [--reps N] [--sf SF_DIR] name ...
@@ -56,9 +58,8 @@ def main() -> int:
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
     plans_dir = Path(__file__).resolve().parent.parent / "plans" / os.environ.get(
-        "QPROF_PLANS_DIR", "r17"
+        "QPROF_PLANS_DIR", ""
     )
-    plans_dir.mkdir(parents=True, exist_ok=True)
 
     for name in names:
         spark.sparkContext.setJobDescription(f"qprof:{name}")
@@ -70,6 +71,7 @@ def main() -> int:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
+            plans_dir.mkdir(parents=True, exist_ok=True)
             (plans_dir / f"{name}_{tag}.txt").write_text(buf.getvalue())
         ts = []
         n = None
@@ -86,7 +88,7 @@ def main() -> int:
                 flush=True,
             )
         else:
-            print(f"{name}: rows={n} (plan dump only)", flush=True)
+            print(f"{name}: plan dump only", flush=True)
         spark.sparkContext.setJobDescription(None)
     return 0
 
