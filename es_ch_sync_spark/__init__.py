@@ -17,7 +17,8 @@ Design stance (see ARCHITECTURE.md):
   shows stock Catalyst subsumes every hand-coded behavior in the reference).
 - Catalog-driven transforms as *metadata*, not code.
 - Pure column expressions in the hot path — no row-at-a-time Python UDFs;
-  Pandas UDFs only where built-ins genuinely can't express the semantics.
+  Python (one Arrow boundary, ``operators.util.map_arrow``) only where
+  built-ins genuinely can't express the semantics.
 - Partitioning, broadcast, and AQE posture chosen for a 1000-executor /
   100 TB deployment even though tests run on local[32].
 """

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from es_ch_sync_spark.operators.sketches import hash56
+from es_ch_sync_spark.operators.util import map_arrow
 
 
 # ---------------------------------------------------------------------------
@@ -237,21 +238,18 @@ def embedding_gram(
     the data volume per vector at d=64 — which is why this is a kernel, not
     a DataFrame composition.
     """
-    import pandas as pd  # noqa: F401 — mapInPandas contract
-
-    iu_schema = "i int, j int, partial double"
 
     def _partial(batches):
         import numpy as np
-        import pandas as pd
 
         acc = np.zeros((dim, dim), dtype=np.float64)
         seen = False
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
             mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64)
+                 for v in rb.column(vec_col).to_numpy(zero_copy_only=False)]
             )
             if mat.size == 0:
                 continue
@@ -260,12 +258,9 @@ def embedding_gram(
         if not seen:
             return
         iu = np.triu_indices(dim)
-        yield pd.DataFrame(
-            {"i": iu[0].astype("int32"), "j": iu[1].astype("int32"),
-             "partial": acc[iu]}
-        )
+        yield iu[0], iu[1], acc[iu]
 
-    partials = emb.select(vec_col).mapInPandas(_partial, schema=iu_schema)
+    partials = map_arrow(emb, [vec_col], "i int, j int, partial double", _partial)
     return (
         partials.groupBy("i", "j")
         .agg(F.round(F.sum("partial"), 4).alias("gram"))

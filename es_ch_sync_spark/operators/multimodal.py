@@ -1,6 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed executor-side through one mapInArrow
-row-map (``_map_blobs``).
+row-map (``_map_blobs`` over ``util.map_arrow``).
 
 Decode support is two-tier, honestly split by what pure numpy can do:
 
@@ -34,9 +34,9 @@ Decode support is two-tier, honestly split by what pure numpy can do:
   never silently fake pixels.
 
 Everything Spark-side is real and tested either way: the schema contract,
-the single Python boundary (``_map_blobs``: Arrow record batches in and
-out, one plain per-row kernel, per-row error isolation), partition
-sizing, and the metadata projection.
+the single Python boundary (``_map_blobs`` over ``util.map_arrow``: Arrow
+record batches in and out, one plain per-row kernel, per-row error
+isolation), partition sizing, and the metadata projection.
 
 Scale posture for binary columns:
 - keep blobs in their own column so Parquet column pruning skips them for
@@ -55,6 +55,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from es_ch_sync_spark.operators.util import map_arrow
+
 # Errors a malformed blob may legitimately raise out of the pure-python
 # codecs.  Row-level kernels catch exactly this tuple so ONE bad
 # real-world blob lands in its row's ``error`` column instead of failing
@@ -70,30 +72,24 @@ _ROW_DECODE_ERRORS = (
 def _map_blobs(
     df: DataFrame, cols: list[str], schema: T.StructType, row_fn
 ) -> DataFrame:
-    """The module's one Python boundary: ``mapInArrow`` over ``cols``.
+    """The module's per-row loop over ``util.map_arrow``.
 
     ``row_fn(*values)`` is a generator called once per input row with
     that row's ``cols`` values (blobs arrive as ``bytes``, nulls as
     None).  Each tuple it yields becomes one output row, prefixed with
-    the row's first value (the id).  Output batches are built against
-    ``schema``'s Arrow form.
+    the row's first value (the id).
 
     When ``schema`` ends in an ``error`` field the helper owns row
     isolation: yielded rows get a null ``error``, and a
     ``_ROW_DECODE_ERRORS`` exception keeps the rows yielded before it,
     then emits one ``(id, nulls…, message)`` row — a bad blob never fails
     the job.  Without an ``error`` field, exceptions propagate."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
     isolate = schema.fieldNames()[-1] == "error"
     catch = _ROW_DECODE_ERRORS if isolate else ()
     tail = (None,) if isolate else ()
     nulls = (None,) * (len(schema.fields) - 2)
 
     def batches(it):
-        import pyarrow as pa
-
         for rb in it:
             rows = []
             for values in zip(*(c.to_pylist() for c in rb.columns)):
@@ -102,13 +98,9 @@ def _map_blobs(
                         rows.append((values[0], *r, *tail))
                 except catch as exc:
                     rows.append((values[0], *nulls, str(exc)[:200]))
-            columns = list(zip(*rows)) or [()] * len(arrow_schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)],
-                schema=arrow_schema,
-            )
+            yield list(zip(*rows)) or [()] * len(schema.fields)
 
-    return df.select(*cols).mapInArrow(batches, schema)
+    return map_arrow(df, cols, schema, batches)
 
 
 MEDIA_SCHEMA = T.StructType(
@@ -766,6 +758,12 @@ def parse_gif_frames(blob: bytes) -> dict:
     if len(blob) < 13:
         raise ValueError("truncated GIF header")
     w, h, packed, bg_idx, _ar = struct.unpack_from("<HHBBB", blob, 6)
+    # Bound the canvas by what the blob can encode BEFORE allocating it:
+    # each LZW code is ≥ 3 bits and expands to ≤ 4096 pixels, so a header
+    # claiming more pixels than that (b"GIF89a garbage" asks for 2.16 GiB)
+    # is malformed — same bound-by-data rule as decode_png.
+    if w * h > len(blob) * 8 // 3 * 4096:
+        raise ValueError(f"GIF canvas {w}x{h} exceeds what {len(blob)} bytes encode")
     pos = 13
     gct = None
     if packed & 0x80:

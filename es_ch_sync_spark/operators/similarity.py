@@ -32,9 +32,16 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from es_ch_sync_spark.operators.util import gather_columns, scan_row_count, spread
+from es_ch_sync_spark.operators.util import (
+    gather_columns,
+    map_arrow,
+    scan_row_count,
+    spread,
+)
+
+# output of every pair scorer (and of the blocked k-NN grid cells)
+_PAIR_SCHEMA = "id_a long, id_b long, cos_sim double"
 
 
 def _as_double(col: Column) -> Column:
@@ -164,7 +171,7 @@ def knn_join_blocked(
     max_broadcast_rows: int = 500_000,
     rows_per_block: int = 8192,
 ) -> DataFrame:
-    """Exact k-NN via blocked matrix multiplication (vectorized Pandas UDF).
+    """Exact k-NN via blocked matrix multiplication (numpy over Arrow batches).
 
     Same output contract as knn_join, ~100× its arithmetic throughput.
     Two tiers, auto-switched on the corpus row count:
@@ -184,7 +191,6 @@ def knn_join_blocked(
       materializing n² pairs; arithmetic is identical to the broadcast
       tier, so both produce the same bits."""
     import numpy as np
-    import pandas as pd
 
     n = scan_row_count(emb)
     if n > max_broadcast_rows:
@@ -194,30 +200,21 @@ def knn_join_blocked(
 
     spark = emb.sparkSession
     # gather B driver-side (only the two needed columns, Arrow path)
-    pdf = gather_columns(emb, [id_col, vec_col])
-    ids = pdf[id_col].to_numpy()
-    Bn = _normalized_matrix(pdf[vec_col])
+    tbl = gather_columns(emb, [id_col, vec_col])
+    ids = tbl.column(id_col).to_numpy()
+    Bn = _normalized_matrix(tbl.column(vec_col).to_numpy())
     b_ids = spark.sparkContext.broadcast(ids)
     b_mat = spark.sparkContext.broadcast(Bn)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rn", T.IntegerType()),
-        ]
-    )
-
-    def score(pdfs):
+    def score(batches):
         ids_b = b_ids.value
         Bn_l = b_mat.value
-        for block in pdfs:
-            if not len(block):
+        for block in batches:
+            if not block.num_rows:
                 continue
-            An = _normalized_matrix(block[vec_col])
+            An = _normalized_matrix(block.column(vec_col).to_numpy(zero_copy_only=False))
             sims = An @ Bn_l.T  # (block, n)
-            a_ids = block[id_col].to_numpy()
+            a_ids = block.column(id_col).to_numpy()
             recs = []
             for r, aid in enumerate(a_ids):
                 row = sims[r]
@@ -231,9 +228,10 @@ def knn_join_blocked(
                     recs.append((int(aid), int(ids_b[j]), round(float(row[j]), 6), rank))
                     if rank == k:
                         break
-            yield pd.DataFrame(recs, columns=["id_a", "id_b", "cos_sim", "rn"])
+            if recs:
+                yield tuple(zip(*recs))
 
-    return spread(emb).select(id_col, vec_col).mapInPandas(score, out_schema)
+    return map_arrow(spread(emb), [id_col, vec_col], _PAIR_SCHEMA + ", rn int", score)
 
 
 def _knn_join_block_pairs(
@@ -253,7 +251,6 @@ def _knn_join_block_pairs(
     import math
 
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import Window as W
 
@@ -272,17 +269,12 @@ def _knn_join_block_pairs(
         .crossJoin(packed.select(F.col("rows").alias("b_rows")))
     )
 
-    cand_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def score_cells(pdfs):
-        for cell in pdfs:
-            for a_rows, b_rows in zip(cell["a_rows"], cell["b_rows"]):
+    def score_cells(batches):
+        for cell in batches:
+            for a_rows, b_rows in zip(
+                cell.column("a_rows").to_numpy(zero_copy_only=False),
+                cell.column("b_rows").to_numpy(zero_copy_only=False),
+            ):
                 a_ids = np.asarray([r["id"] for r in a_rows], dtype=np.int64)
                 b_ids = np.asarray([r["id"] for r in b_rows], dtype=np.int64)
                 An = _normalized_matrix([r["vec"] for r in a_rows])
@@ -300,9 +292,10 @@ def _knn_join_block_pairs(
                         recs.append((int(aid), int(b_ids[j]), float(row[j])))
                         if rank == k:
                             break
-                yield pd.DataFrame(recs, columns=["id_a", "id_b", "cos_sim"])
+                if recs:
+                    yield tuple(zip(*recs))
 
-    cand = grid.mapInPandas(score_cells, cand_schema)
+    cand = map_arrow(grid, ["a_rows", "b_rows"], _PAIR_SCHEMA, score_cells)
     w = W.partitionBy("id_a").orderBy(F.col("cos_sim").desc(), F.col("id_b").asc())
     return (
         cand.withColumn("rn", F.row_number().over(w))
@@ -403,7 +396,6 @@ def embedding_near_duplicates(
     n_planes: int = 12,
     bands: int = 4,
     dim: int = 64,
-    broadcast_vectors: bool | None = None,
     max_broadcast_rows: int = 500_000,
     bucket_cap: int | None = None,
 ) -> DataFrame:
@@ -423,8 +415,8 @@ def embedding_near_duplicates(
     exact/checksum dedup already handles in O(n).  Default None keeps
     candidate generation exhaustive.
 
-    Scoring is two tiers, auto-switched on the corpus row count when
-    ``broadcast_vectors`` is None:
+    Scoring is two tiers, auto-switched on the corpus row count
+    (``max_broadcast_rows=0`` forces the scale tier):
 
     - **small-B broadcast tier** (n ≤ ``max_broadcast_rows``): one driver
       gather + whole-matrix broadcast; pairs stay (long, long) rows
@@ -521,9 +513,7 @@ def embedding_near_duplicates(
     # no spread() here: pairs comes out of a shuffle (already cluster-wide),
     # and spread's partition-count probe on a computed frame would plan and
     # run the upstream pipeline eagerly at build time
-    if broadcast_vectors is None:
-        broadcast_vectors = scan_row_count(emb) <= max_broadcast_rows
-    if broadcast_vectors:
+    if scan_row_count(emb) <= max_broadcast_rows:
         # small-corpus tier: pairs stay (long, long) rows end-to-end; vectors
         # ride once as a broadcast matrix and each partition scores its pairs
         # with one gather + einsum.  Numpy over the Column-expression fold
@@ -551,38 +541,29 @@ def _score_pairs_numpy(
     Exact semantics of dot/(|a||b|): computed as normalized-row dot (same
     value up to final-ulp rounding; every consumer rounds to 6dp)."""
     import numpy as np
-    import pandas as pd
 
     spark = emb.sparkSession
-    pdf = gather_columns(emb, [id_col, vec_col])
-    ids = pdf[id_col].to_numpy()
-    Bn = _normalized_matrix(pdf[vec_col])
+    tbl = gather_columns(emb, [id_col, vec_col])
+    ids = tbl.column(id_col).to_numpy()
+    Bn = _normalized_matrix(tbl.column(vec_col).to_numpy())
     index = {int(i): r for r, i in enumerate(ids)}
     b_idx = spark.sparkContext.broadcast(index)
     b_mat = spark.sparkContext.broadcast(Bn)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
 
     def score(blocks):
         idx = b_idx.value
         M = b_mat.value
         for block in blocks:
-            if not len(block):
+            n = block.num_rows
+            if not n:
                 continue
-            ra = np.fromiter((idx[int(i)] for i in block["id_a"]), dtype=np.int64, count=len(block))
-            rb = np.fromiter((idx[int(i)] for i in block["id_b"]), dtype=np.int64, count=len(block))
+            id_a, id_b = block.column("id_a"), block.column("id_b")
+            ra = np.fromiter((idx[int(i)] for i in id_a.to_numpy()), dtype=np.int64, count=n)
+            rb = np.fromiter((idx[int(i)] for i in id_b.to_numpy()), dtype=np.int64, count=n)
             cos = np.einsum("ij,ij->i", M[ra], M[rb])
-            yield pd.DataFrame(
-                {"id_a": block["id_a"], "id_b": block["id_b"], "cos_sim": cos}
-            )
+            yield id_a, id_b, cos
 
-    return pairs.mapInPandas(score, out_schema)
+    return map_arrow(pairs, ["id_a", "id_b"], _PAIR_SCHEMA, score)
 
 
 def _score_pairs_joined(
@@ -599,32 +580,21 @@ def _score_pairs_joined(
     is its own Arrow batch.  Uses the same ``_normalized_matrix`` + einsum
     arithmetic as the broadcast tier, so scores are bit-identical."""
     import numpy as np
-    import pandas as pd
 
     va = v.select(F.col(id_col).alias("id_a"), F.col("v").alias("v_a"))
     vb = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("v_b"))
     attached = pairs.join(va, "id_a").join(vb, "id_b")
 
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
     def score(blocks):
         for block in blocks:
-            if not len(block):
+            if not block.num_rows:
                 continue
-            An = _normalized_matrix(block["v_a"])
-            Bn = _normalized_matrix(block["v_b"])
+            An = _normalized_matrix(block.column("v_a").to_numpy(zero_copy_only=False))
+            Bn = _normalized_matrix(block.column("v_b").to_numpy(zero_copy_only=False))
             cos = np.einsum("ij,ij->i", An, Bn)
-            yield pd.DataFrame(
-                {"id_a": block["id_a"], "id_b": block["id_b"], "cos_sim": cos}
-            )
+            yield block.column("id_a"), block.column("id_b"), cos
 
-    return attached.mapInPandas(score, out_schema)
+    return map_arrow(attached, ["id_a", "id_b", "v_a", "v_b"], _PAIR_SCHEMA, score)
 
 
 def sq8_stats(emb: DataFrame, vec_col: str = "embedding") -> tuple[list[float], list[float]]:

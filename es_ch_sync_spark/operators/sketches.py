@@ -44,6 +44,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from es_ch_sync_spark.operators.util import map_arrow
+
 # 56-bit hash space: first 14 hex chars of md5. Matches the family used by
 # operators.dedup / operators.sampling so oracles share one hex-parse helper.
 HASH_BITS = 56
@@ -373,32 +375,31 @@ def misra_gries_candidates(df: DataFrame, key_col: str, k: int = 64) -> DataFram
     at least one partition, so the union of partition summaries is a
     superset of the true heavy hitters.
 
-    Scale: the pass is a single mapInPandas scan emitting ≤ k rows per
-    partition (k·P total) with NO shuffle; batches fold in vectorized via
-    pandas value_counts.  This is the hot-key detector that feeds skew
-    salting (cf. key_skew_report) without a groupBy over the full key
-    space."""
-    import pandas as pd
+    Scale: the pass is a single Arrow-batch scan (``util.map_arrow``)
+    emitting ≤ k rows per partition (k·P total) with NO shuffle; batches
+    fold in vectorized via ``pyarrow.compute.value_counts`` (nulls dropped
+    — a null key is never a candidate).  This is the hot-key detector that
+    feeds skew salting (cf. key_skew_report) without a groupBy over the
+    full key space."""
 
     def summarize(batches):
+        import pyarrow.compute as pc
+
         summary: dict = {}
-        for pdf in batches:
-            vc = pdf[key_col].value_counts()
-            for key, cnt in vc.items():
-                summary[key] = summary.get(key, 0) + int(cnt)
+        for rb in batches:
+            vc = pc.value_counts(pc.drop_null(rb.column(key_col)))
+            keys, cnts = vc.field("values").to_pylist(), vc.field("counts").to_pylist()
+            for key, cnt in zip(keys, cnts):
+                summary[key] = summary.get(key, 0) + cnt
             if len(summary) > k:
                 # subtract the (k+1)-th largest count from all entries
                 cuts = sorted(summary.values(), reverse=True)
                 delta = cuts[k]
                 summary = {key: c - delta for key, c in summary.items() if c > delta}
         if summary:
-            yield pd.DataFrame(
-                {key_col: list(summary.keys()), "mg_residual": list(summary.values())}
-            )
+            yield list(summary.keys()), list(summary.values())
 
-    return df.select(key_col).mapInPandas(
-        summarize, schema=f"{key_col} string, mg_residual long"
-    )
+    return map_arrow(df, [key_col], f"{key_col} string, mg_residual long", summarize)
 
 
 def heavy_hitters_exact(df: DataFrame, key_col: str, k: int = 64) -> DataFrame:

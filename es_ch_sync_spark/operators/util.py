@@ -124,22 +124,50 @@ def scan_row_count(df: DataFrame, max_files: int = 64) -> int:
 
 
 def gather_columns(df: DataFrame, cols: list[str]):
-    """``df.select(*cols).toPandas()`` without a Spark job when the frame
+    """``df.select(*cols).toArrow()`` without a Spark job when the frame
     is a bare file scan: the parquet files are read driver-side with
     pyarrow (same bytes, same values — the scan has no expressions to
-    apply).  The caller is responsible for having bounded the row count
-    (every use rides behind a ``scan_row_count`` tier gate).  Column
-    order follows ``cols``; row order is file order, which callers must
-    not rely on (both paths build id→row indexes)."""
+    apply).  Returns a ``pyarrow.Table``.  The caller is responsible for
+    having bounded the row count (every use rides behind a
+    ``scan_row_count`` tier gate).  Column order follows ``cols``; row
+    order is file order, which callers must not rely on (both paths
+    build id→row indexes)."""
     files = bare_scan_files(df)
     if files is not None:
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tables = [pq.read_table(f, columns=cols) for f in files]
+        return pa.concat_tables(pq.read_table(f, columns=cols) for f in files)
+    return df.select(*cols).toArrow()
+
+
+def map_arrow(df: DataFrame, cols: list[str], schema, fn) -> DataFrame:
+    """The engine's one Python boundary outside ``streaming/``:
+    ``mapInArrow`` over ``cols``.
+
+    ``fn`` receives the partition's iterator of ``pyarrow.RecordBatch``
+    (columns in ``cols`` order) and yields one tuple of columns per
+    output batch, in ``schema`` order; a column may be a list, a numpy
+    array or an Arrow array.  Each output batch is built against
+    ``schema``'s Arrow form (``schema`` is a StructType or a DDL
+    string)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def batches(it):
         import pyarrow as pa
 
-        return pa.concat_tables(tables).to_pandas()
-    return df.select(*cols).toPandas()
+        for columns in fn(it):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.select(*cols).mapInArrow(batches, schema)
 
 
 def register_intermediate(result: DataFrame, *cached: DataFrame) -> DataFrame:

@@ -1584,7 +1584,7 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("knn_join_blocked", oracles.knn_join_sql(k=3))
 def q_knn_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-NN via blocked numpy matmul (vectorized Pandas UDF) — same
+    """Exact 3-NN via blocked numpy matmul over Arrow batches — same
     oracle as knn_join, ~2 orders faster arithmetic."""
     return sim.knn_join_blocked(_emb(spark, sf_dir), k=3)
 

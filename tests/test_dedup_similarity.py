@@ -178,32 +178,22 @@ def test_knn_blocked_tiers_identical(spark, emb):
 
 
 def test_embedding_near_dup_scorer_tiers_identical(spark, emb):
-    """Scale-tier distributed join-attach scorer (what auto-switch picks
-    above max_broadcast_rows) ≡ small-B broadcast scorer."""
+    """Scale-tier distributed join-attach scorer (forced via
+    max_broadcast_rows=0) ≡ small-B broadcast scorer (what auto-switch
+    picks for a tiny corpus)."""
     small = emb.limit(400)
     dist = {
-        tuple(r)
-        for r in sim.embedding_near_duplicates(
-            small, threshold=0.3, broadcast_vectors=False
-        ).collect()
-    }
-    bcast = {
-        tuple(r)
-        for r in sim.embedding_near_duplicates(
-            small, threshold=0.3, broadcast_vectors=True
-        ).collect()
-    }
-    assert dist == bcast
-    assert len(dist) > 0
-    # auto-switch: a tiny corpus picks the broadcast tier, a forced-low
-    # threshold picks the distributed tier — same rows either way
-    auto_dist = {
         tuple(r)
         for r in sim.embedding_near_duplicates(
             small, threshold=0.3, max_broadcast_rows=0
         ).collect()
     }
-    assert auto_dist == bcast
+    bcast = {
+        tuple(r)
+        for r in sim.embedding_near_duplicates(small, threshold=0.3).collect()
+    }
+    assert dist == bcast
+    assert len(dist) > 0
 
 
 def test_text_analysis_ranges(spark, docs):
@@ -298,6 +288,11 @@ _ERROR_KERNELS = {
     ),
     "dhash": (mm.dhash_features, _BMP, _BAD_JPEG, "JPEG"),
 }
+# a GIF header claiming a 26400x29281 canvas (2.16 GiB) in 14 bytes must
+# land in the error column, not kill the Python worker
+for _name in ("pixel", "resize", "dhash", "gif_fingerprints"):
+    _kernel, _good, _, _ = _ERROR_KERNELS[_name]
+    _ERROR_KERNELS[f"{_name}_gif_canvas"] = (_kernel, _good, b"GIF89a garbage", "GIF canvas")
 
 
 @pytest.mark.parametrize("name", sorted(_ERROR_KERNELS))

@@ -77,6 +77,18 @@ def test_no_cartesian_in_lsh(plans):
         assert "BroadcastNestedLoopJoin" not in p, q
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["embedding_near_dup", "knn_join_blocked", "embedding_gram", "heavy_hitters",
+     "multimodal_gif_stats"],
+)
+def test_python_boundary_is_arrow(plans, name):
+    # outside streaming/ every Python crossing goes through util.map_arrow
+    p = plans(name)
+    assert "MapInArrow" in p
+    assert "MapInPandas" not in p
+
+
 def test_range_join_is_equi(plans):
     p = plans("range_join_events")
     assert "BroadcastNestedLoopJoin" not in p

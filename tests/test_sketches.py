@@ -209,6 +209,14 @@ def test_mg_candidates_superset_of_heavy_hitters(spark):
     # exact counts, not residuals
     freqs = {r["key"]: r["freq"] for r in got.collect()}
     assert freqs.get("hh_a") == 1500
+    # null keys are never a candidate and leave the candidate set unchanged
+    # (union keeps df's partitions as they are and adds the null rows)
+    nulls = spark.createDataFrame([(None,)] * 700, "key string")
+    null_cands = [
+        r["key"] for r in misra_gries_candidates(df.union(nulls), "key", k).collect()
+    ]
+    assert None not in null_cands
+    assert set(null_cands) == cands
 
 
 def test_mg_summary_bounded_per_partition(spark):

@@ -129,7 +129,7 @@ def test_two_phase_rank_rejects_duplicate_order_keys(spark):
 def test_metadata_fast_paths_match_spark(spark, tmp_path):
     """r16 optimization pins: bare_scan_files/scan_row_count/
     gather_columns answer from parquet footers ONLY for bare file scans
-    and agree exactly with count()/toPandas(); any non-scan frame falls
+    and agree exactly with count()/toArrow(); any non-scan frame falls
     back to the distributed path."""
     from pyspark.sql import functions as F
 
@@ -147,9 +147,12 @@ def test_metadata_fast_paths_match_spark(spark, tmp_path):
     files = bare_scan_files(df)
     assert files and all(f.endswith(".parquet") for f in files)
     assert scan_row_count(df) == 100 == df.count()
-    g = gather_columns(df, ["id", "v"]).sort_values("id").reset_index(drop=True)
-    t = df.select("id", "v").toPandas().sort_values("id").reset_index(drop=True)
-    assert g.equals(t)
+    g = gather_columns(df, ["id", "v"]).sort_by("id")
+    t = df.select("id", "v").toArrow().sort_by("id")
+    # same columns, types and values (the footer schema keeps the writer's
+    # non-null flags, Spark's read schema is all-nullable)
+    assert g.schema.types == t.schema.types
+    assert g.column_names == t.column_names and g.to_pydict() == t.to_pydict()
     # filtered/derived frames are NOT bare scans: must fall back
     flt = df.filter(F.col("id") < 10)
     assert bare_scan_files(flt) is None

@@ -116,7 +116,7 @@ def main() -> None:
             f"embedding_near_dup x{replicas} (scale tier, join-attach)",
             lambda: sim.embedding_near_duplicates(
                 emb, threshold=0.4, n_planes=n_planes, bands=4,
-                broadcast_vectors=False,
+                max_broadcast_rows=0,
             ).count(),
         )
     if "embdup_bcast" in only:
@@ -124,7 +124,7 @@ def main() -> None:
             f"embedding_near_dup x{replicas} (broadcast tier)",
             lambda: sim.embedding_near_duplicates(
                 emb, threshold=0.4, n_planes=n_planes, bands=4,
-                broadcast_vectors=True,
+                max_broadcast_rows=10**12,
             ).count(),
         )
     if "inc" in only:
